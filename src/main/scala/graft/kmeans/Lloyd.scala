@@ -1,5 +1,8 @@
 package graft.kmeans
 
+import scala.collection.immutable.ArraySeq
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -17,7 +20,7 @@ case class Centroid(cid: Int, coordinates: Array[Double])
   * take the per-dimension mean (reducer.py:19-30,58-67) -> master concatenates
   * and checks convergence (master.py:97-103,149-152).
   *
-  * Here one iteration is ONE narrow map stage + ONE aggregation:
+  * Here one iteration ([[step]]) is ONE Spark job with ONE stage:
   *
   *   - centroids are collected to the driver (K rows) and inlined as a
   *     literal array, so assignment is a per-row expression — *no join and
@@ -25,9 +28,15 @@ case class Centroid(cid: Int, coordinates: Array[Double])
   *     crossJoin+min_by plan (which shuffles N·K rows) and mirrors the
   *     reference's broadcast of centroids inside every RPC request
   *     (kmeans.proto:16, master.py:182-186).
-  *   - the mean is either a posexplode/avg plan (oracle-translatable) or
-  *     [[VecMeanAgg]] (shuffles K buffers instead of N·D rows — the 100 TB
-  *     path).
+  *   - each map task folds its assigned rows into one [[VecMeanBuf]] per
+  *     cid (the reference's mapper + combiner); the K-row reduce, the
+  *     divide and the cid sort run on the driver over the tasks' partials,
+  *     so no exchange, no adaptive re-plan and no global sort is planned
+  *     (until the partials outgrow `spark.driver.maxResultSize`; see
+  *     [[step]]).
+  *     The posexplode/avg mean ([[updateExplode]], oracle-translatable)
+  *     and the [[VecMeanAgg]] group-by ([[updateAgg]]) stay as the
+  *     DataFrame forms of the same mean.
   *   - the loop never grows lineage: every iteration's plan is rebuilt from
   *     the cached points plus the new centroid literals.
   *
@@ -147,9 +156,71 @@ object Lloyd {
     java.math.BigDecimal.valueOf(v)
       .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue() + 0.0
 
+  /** Centroids from per-cid means, sorted by cid, each mean snapped to the
+    * 1e-d decimal grid when `grid = Some(d)`.
+    */
+  private def centroids(means: Iterable[(Int, Array[Double])], grid: Option[Int]): Seq[Centroid] =
+    means.toSeq.sortBy(_._1).map { case (cid, m) => Centroid(cid, grid.fold(m)(d => m.map(snap(_, d)))) }
+
+  /** One Lloyd iteration as one Spark job with one stage: the [[assign]]
+    * map, then each task folds its rows into a per-cid [[VecMeanBuf]] with
+    * [[VecMeanAgg.reduce]]. The driver collects the partials, merges them
+    * with [[VecMeanAgg.merge]] in partition order, divides, snaps to the
+    * grid and sorts by cid. Partition order makes the means the same from
+    * run to run, which merging as tasks finish (`treeAggregate`) would not.
+    * It is also the order the [[updateAgg]] exchange reads local map
+    * outputs in, so on one executor the means are bit-identical to
+    * `updateAgg(assign(points, cents)).orderBy("cid")` on the same input.
+    * A retried task starts from an empty map, and only successful tasks
+    * report a partial, so no row is counted twice.
+    *
+    * Each partial is at most K buffers of D doubles, and the driver holds
+    * all P of them at once. Spark counts every task result of a job against
+    * `spark.driver.maxResultSize`, so the one-job shape needs about
+    * P × K × (D + 1) × 8 bytes under that limit. When that estimate passes
+    * half the limit ([[partialsFit]]), the iteration runs as the
+    * [[updateAgg]] query instead, which shuffles the same buffers and
+    * collects K rows.
+    */
+  def step(points: DataFrame, cents: Seq[Centroid], grid: Option[Int] = None): Seq[Centroid] =
+    step(points, cents, grid,
+      points.sparkSession.sparkContext.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g"))
+
+  private[kmeans] def step(points: DataFrame, cents: Seq[Centroid], grid: Option[Int],
+                           maxResultBytes: Long): Seq[Centroid] = {
+    val assigned = assign(points, cents)
+    val rows = assigned.select("cid", "coordinates").queryExecution.toRdd
+    val d = cents.headOption.fold(0)(_.coordinates.length)
+    val means =
+      if (!partialsFit(rows.getNumPartitions, cents.size, d, maxResultBytes))
+        updateAgg(assigned).collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).toSeq
+      else rows.mapPartitions { it =>
+        val bufs = mutable.HashMap.empty[Int, VecMeanBuf]
+        it.foreach { r =>
+          val v = ArraySeq.unsafeWrapArray(r.getArray(1).toDoubleArray())
+          bufs.updateWith(r.getInt(0))(b => Some(VecMeanAgg.reduce(b.getOrElse(VecMeanAgg.zero), v)))
+        }
+        Iterator(bufs.toMap)
+      }.collect().foldLeft(Map.empty[Int, VecMeanBuf]) { (acc, part) =>
+        part.foldLeft(acc) { case (m, (cid, b)) =>
+          m.updated(cid, VecMeanAgg.merge(m.getOrElse(cid, VecMeanAgg.zero), b))
+        }
+      }.map { case (cid, b) => cid -> VecMeanAgg.finish(b).toArray }
+    centroids(means, grid)
+  }
+
+  /** Whether P partials of K (sum, count) buffers of D doubles, ~P × K ×
+    * (D + 1) × 8 bytes, fit in half of `maxResultBytes` (0 = no limit). The
+    * other half is headroom for serialization overhead.
+    */
+  private[kmeans] def partialsFit(numPartitions: Int, k: Int, d: Int, maxResultBytes: Long): Boolean =
+    maxResultBytes <= 0 || numPartitions.toLong * k * (d + 1) * 8 <= maxResultBytes / 2
+
   /** Full driver loop: iterate until `maxIter` or all centroids moved < eps.
-    * Each iteration is one Spark action (the K-row collect); points are
-    * cached once. Returns (final centroids, iterations run).
+    * Each iteration is one [[step]] (one Spark job) with `useAgg`, or the
+    * [[updateExplode]] plan sorted on the driver without; points are cached
+    * once. Every iteration writes `[lloyd] iter=<i> max_shift=<d> s=<t>` to
+    * stderr. Returns (final centroids, iterations run).
     *
     * `grid = Some(d)` snaps every collected mean to the 1e-d decimal grid
     * before the next assignment — the q_kmeans_iter2 determinism
@@ -166,26 +237,26 @@ object Lloyd {
     var iters = 0
     var converged = false
     while (iters < maxIter && !converged) {
-      val assigned = assign(pts, cents)
-      val upd = if (useAgg) updateAgg(assigned) else updateExplode(assigned)
-      val next = upd.orderBy("cid").collect().map { r =>
-        val raw = r.getSeq[Double](r.fieldIndex("coordinates")).toArray
-        Centroid(r.getInt(r.fieldIndex("cid")),
-          grid.fold(raw)(d => raw.map(snap(_, d))))
-      }.toSeq
+      val t0 = System.nanoTime()
+      val next =
+        if (useAgg) step(pts, cents, grid)
+        else centroids(updateExplode(assign(pts, cents)).collect()
+          .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray), grid)
       iters += 1
       // id-join convergence: every surviving centroid moved < eps AND no
       // cluster vanished this round (a vanish changes the id set -> not
       // converged, matching the count==len check at master.py:149-151).
       val prev = cents.map(c => c.cid -> c.coordinates).toMap
-      converged = next.size == cents.size && next.forall { c =>
-        prev.get(c.cid).exists { p =>
+      val maxShift = next.foldLeft(0.0) { (m, c) =>
+        math.max(m, prev.get(c.cid).fold(Double.PositiveInfinity) { p =>
           var s = 0.0; var i = 0
           while (i < p.length) { val d = p(i) - c.coordinates(i); s += d * d; i += 1 }
-          math.sqrt(s) < eps
-        }
+          math.sqrt(s)
+        })
       }
+      converged = next.size == cents.size && maxShift < eps
       cents = next
+      System.err.println(f"[lloyd] iter=$iters max_shift=$maxShift%.3e s=${(System.nanoTime() - t0) / 1e9}%.3f")
     }
     pts.unpersist()
     (cents, iters)

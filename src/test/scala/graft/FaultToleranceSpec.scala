@@ -5,6 +5,8 @@ import org.apache.spark.TaskContext
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.kmeans.{Centroid, Lloyd}
+
 /** The reference's fault-tolerance story — simulated worker failure with
   * synchronous restart (/root/reference/mapper.py:52-55, master.py:161-166)
   * — maps to Spark task re-attempts (`spark.task.maxFailures`). A UDF
@@ -25,4 +27,32 @@ class FaultToleranceSpec extends AnyFunSuite {
     val got = df.select(sum(failOnce(col("x")))).head().getLong(0)
     assert(got == (1L to 1000L).map(_ * 2).sum)
   }
+
+  test("a Lloyd step whose every task fails on attempt 0 is bit-identical to the no-fault step") {
+    val spark = TestSpark.spark
+    // four splits, so the driver merges four retried partials
+    val pts = graft.core.Tables.points(spark, TestSpark.Sf0001).repartition(4)
+    val cents = Lloyd.initCentroids(pts, 5)
+    val failOnce = udf { (v: Seq[Double]) =>
+      if (TaskContext.get().attemptNumber() == 0) {
+        FaultToleranceSpec.injected.incrementAndGet()
+        throw new RuntimeException("simulated worker failure (p=1.0 on attempt 0)")
+      }
+      v
+    }
+    // uncached: every retried task re-reads and re-assigns its split, and
+    // must fold it from an empty buffer map
+    val faulty = pts.withColumn("coordinates", failOnce(col("coordinates")))
+    val injected0 = FaultToleranceSpec.injected.get()
+    val got = Lloyd.step(faulty, cents)
+    assert(FaultToleranceSpec.injected.get() - injected0 == 4)
+    def bits(cs: Seq[Centroid]) =
+      cs.map(c => c.cid -> c.coordinates.map(java.lang.Double.doubleToRawLongBits).toSeq)
+    assert(bits(got) == bits(Lloyd.step(pts, cents)))
+  }
+}
+
+object FaultToleranceSpec {
+  // tasks run in the test JVM (local mode), so the UDF can count its throws here
+  val injected = new java.util.concurrent.atomic.AtomicInteger()
 }

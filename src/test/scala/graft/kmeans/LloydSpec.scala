@@ -1,6 +1,8 @@
 package graft.kmeans
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.TestSpark
@@ -32,6 +34,37 @@ class LloydSpec extends AnyFunSuite {
     }
     (assign, means)
   }
+
+  /** One iteration as the `updateAgg` DataFrame query (exchange, cid sort,
+    * collect), snapped like Spark SQL `round(m, d) + 0.0`: the reference
+    * that [[Lloyd.step]] must match bit for bit.
+    */
+  private def aggStep(pts: DataFrame, cents: Seq[Centroid], grid: Option[Int] = None): Seq[Centroid] =
+    Lloyd.updateAgg(Lloyd.assign(pts, cents)).orderBy("cid").collect().map { r =>
+      val m = r.getSeq[Double](1).toArray
+      Centroid(r.getInt(0), grid.fold(m)(d => m.map(v => java.math.BigDecimal.valueOf(v)
+        .setScale(d, java.math.RoundingMode.HALF_UP).doubleValue() + 0.0)))
+    }.toSeq
+
+  /** [[aggStep]] looped with the id-joined convergence rule of master.py. */
+  private def aggLoop(pts: DataFrame, k: Int, maxIter: Int, eps: Double,
+                      grid: Option[Int]): (Seq[Centroid], Int) = {
+    var cents = Lloyd.initCentroids(pts, k)
+    var iters = 0
+    var converged = false
+    while (iters < maxIter && !converged) {
+      val next = aggStep(pts, cents, grid)
+      iters += 1
+      val prev = cents.map(c => c.cid -> c.coordinates).toMap
+      converged = next.size == cents.size && next.forall(c => prev.get(c.cid).exists(p =>
+        math.sqrt(p.indices.map(i => (p(i) - c.coordinates(i)) * (p(i) - c.coordinates(i))).sum) < eps))
+      cents = next
+    }
+    (cents, iters)
+  }
+
+  private def bits(cs: Seq[Centroid]) =
+    cs.map(c => c.cid -> c.coordinates.map(java.lang.Double.doubleToRawLongBits).toSeq)
 
   test("iteration 1 on the reference's 20-point sample matches a scalar replica") {
     val df = TestSpark.refPointsDf
@@ -95,10 +128,98 @@ class LloydSpec extends AnyFunSuite {
       val sse = Lloyd.sse(pts, cents)
       assert(sse <= prevSse + 1e-6, s"SSE increased: $prevSse -> $sse")
       prevSse = sse
-      cents = Lloyd.updateAgg(Lloyd.assign(pts, cents)).orderBy("cid")
-        .collect().map(r => Centroid(r.getInt(0), r.getSeq[Double](1).toArray)).toSeq
+      cents = aggStep(pts, cents)
     }
     pts.unpersist()
+  }
+
+  test("step matches the updateAgg mean bit for bit; run(grid = 7) matches its loop (sf0.001)") {
+    val pts = graft.core.Tables.points(spark, TestSpark.Sf0001).cache()
+    val cents = Lloyd.initCentroids(pts, 5)
+    assert(bits(Lloyd.step(pts, cents)) == bits(aggStep(pts, cents)))
+    val (got, gotIters) = Lloyd.run(pts, k = 5, grid = Some(7))
+    val (exp, expIters) = aggLoop(pts, k = 5, maxIter = 10, eps = 1e-6, grid = Some(7))
+    assert(gotIters == expIters)
+    assert(bits(got) == bits(exp))
+    // the explode mean, sorted on the driver: same loop to within the grid
+    val (explode, explodeIters) = Lloyd.run(pts, k = 5, useAgg = false, grid = Some(7))
+    assert(explodeIters == gotIters)
+    assert(explode.map(_.cid) == got.map(_.cid))
+    for ((e, g) <- explode.zip(got); i <- g.coordinates.indices)
+      assert(math.abs(e.coordinates(i) - g.coordinates(i)) < 1e-7, s"cid ${g.cid} dim $i")
+    pts.unpersist()
+  }
+
+  /** (jobs, stages, shuffle map tasks) that `body` runs, counted by a
+    * `SparkListener` on a local property set only around `body`.
+    */
+  private def counted[T](body: => T): (T, (Int, Int, Int)) = {
+    val sc = spark.sparkContext
+    val tag = "graft.test.lloyd"
+    var jobs, stages, shuffleMapTasks = 0
+    val listener = new SparkListener {
+      private val mine = scala.collection.mutable.Set.empty[Int]
+      override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+        if (Option(e.properties).exists(_.getProperty(tag) != null)) {
+          jobs += 1
+          mine ++= e.stageIds
+        }
+      }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = synchronized {
+        if (mine(e.stageInfo.stageId)) stages += 1
+      }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+        if (mine(e.stageId) && e.taskType == "ShuffleMapTask") shuffleMapTasks += 1
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "1")
+      val out = try body finally sc.setLocalProperty(tag, null)
+      org.apache.spark.TestListenerBus.drain(sc)
+      (out, listener.synchronized((jobs, stages, shuffleMapTasks)))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("one Lloyd iteration is one Spark job with one stage and no shuffle") {
+    // eps = 0 never converges, so each call runs exactly maxIter iterations
+    def run(maxIter: Int) = counted(
+      Lloyd.run(graft.core.Tables.points(spark, TestSpark.Sf0001), k = 5, maxIter = maxIter, eps = 0.0)._2)
+    val (iters2, (jobs2, stages2, _)) = run(2)
+    val (iters3, (jobs3, stages3, shuffle3)) = run(3)
+    assert(iters2 == 2 && iters3 == 3)
+    assert(jobs3 - jobs2 == 1, s"jobs per iteration: ${jobs3 - jobs2}")
+    assert(stages3 - stages2 == 1, s"stages per iteration: ${stages3 - stages2}")
+    assert(shuffle3 == 0, s"$shuffle3 shuffle map tasks in a 3-iteration run")
+  }
+
+  test("step falls back to the updateAgg query when the partials would pass maxResultSize") {
+    // K = 5, D = 64: 2,600 bytes of partials per partition against half of 1 GiB
+    assert(Lloyd.partialsFit(206000, 5, 64, 1L << 30))
+    assert(!Lloyd.partialsFit(207000, 5, 64, 1L << 30))
+    assert(Lloyd.partialsFit(Int.MaxValue, 5, 64, 0L))
+    val pts = graft.core.Tables.points(spark, TestSpark.Sf0001).repartition(4).cache()
+    val cents = Lloyd.initCentroids(pts, 5)
+    val (oneJob, (_, _, oneJobShuffle)) = counted(Lloyd.step(pts, cents, None, 1L << 30))
+    val (fallback, (_, _, fallbackShuffle)) = counted(Lloyd.step(pts, cents, None, 1L))
+    assert(oneJobShuffle == 0)
+    assert(fallbackShuffle > 0, "the fallback did not run the updateAgg exchange")
+    assert(bits(fallback) == bits(oneJob))
+    assert(bits(fallback) == bits(aggStep(pts, cents)))
+    pts.unpersist()
+  }
+
+  test("grid-snapped run is partition-independent: 1 and 7 partitions, some empty (sf0.001)") {
+    val pts = graft.core.Tables.points(spark, TestSpark.Sf0001)
+    val seven = pts.repartition(7, col("vec_id") % 3)
+    val sizes = seven.queryExecution.toRdd.mapPartitions(it => Iterator(it.size)).collect()
+    assert(sizes.length == 7 && sizes.count(_ == 0) >= 4, sizes.mkString(","))
+    val (base, baseIters) = Lloyd.run(pts, k = 5, grid = Some(7))
+    for ((name, df) <- Seq("1" -> pts.repartition(1), "7" -> seven)) {
+      val (got, iters) = Lloyd.run(df, k = 5, grid = Some(7))
+      assert(iters == baseIters, s"$name partitions")
+      assert(bits(got) == bits(base), s"$name partitions")
+    }
   }
 
   test("full loop converges and assignment is a fixpoint at convergence") {
