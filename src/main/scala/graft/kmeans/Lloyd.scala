@@ -1,15 +1,24 @@
 package graft.kmeans
 
-import scala.collection.immutable.ArraySeq
 import scala.collection.mutable
 
+import org.apache.spark.{HashPartitioner, SparkException}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-
-import graft.core.Vec
+import org.apache.spark.storage.StorageLevel
 
 /** A cluster center: id + N-dim vector (kmeans.proto:9-12). */
 case class Centroid(cid: Int, coordinates: Array[Double])
+
+/** Up to `Lloyd.BlockRows` points of one length `d`, dense: row `i` is
+  * `ids(i)` with coordinates `xs(i * d until (i + 1) * d)`. Never empty.
+  */
+private[kmeans] final case class Block(ids: Array[Long], xs: Array[Double]) {
+  def n: Int = ids.length
+  def d: Int = xs.length / ids.length
+}
 
 /** Lloyd's algorithm as idiomatic Spark dataflow.
   *
@@ -20,25 +29,28 @@ case class Centroid(cid: Int, coordinates: Array[Double])
   * take the per-dimension mean (reducer.py:19-30,58-67) -> master concatenates
   * and checks convergence (master.py:97-103,149-152).
   *
-  * Here one iteration ([[step]]) is ONE Spark job with ONE stage:
+  * [[run]] plans its input once: `(vec_id, coordinates)` rows are packed
+  * into dense [[Block]]s and persisted `MEMORY_AND_DISK` (8 × D bytes of
+  * coordinates plus 8 bytes of id per point). The init job fills that cache,
+  * and then one iteration ([[step]]) is ONE Spark job with ONE stage over
+  * it, with no query planned per iteration:
   *
-  *   - centroids are collected to the driver (K rows) and inlined as a
-  *     literal array, so assignment is a per-row expression — *no join and
-  *     no shuffle at all* on the big side. This is strictly better than a
-  *     crossJoin+min_by plan (which shuffles N·K rows) and mirrors the
+  *   - the K × D centroid matrix travels in the task closure, the
   *     reference's broadcast of centroids inside every RPC request
-  *     (kmeans.proto:16, master.py:182-186).
-  *   - each map task folds its assigned rows into one [[VecMeanBuf]] per
-  *     cid (the reference's mapper + combiner); the K-row reduce, the
-  *     divide and the cid sort run on the driver over the tasks' partials,
-  *     so no exchange, no adaptive re-plan and no global sort is planned
-  *     (until the partials outgrow `spark.driver.maxResultSize`; see
-  *     [[step]]).
-  *     The posexplode/avg mean ([[updateExplode]], oracle-translatable)
-  *     and the [[VecMeanAgg]] group-by ([[updateAgg]]) stay as the
-  *     DataFrame forms of the same mean.
-  *   - the loop never grows lineage: every iteration's plan is rebuilt from
-  *     the cached points plus the new centroid literals.
+  *     (kmeans.proto:16, master.py:182-186), so assignment needs no join
+  *     and no shuffle on the big side;
+  *   - each task runs a primitive argmin loop over its blocks and folds
+  *     every row into its cluster's (sum, count) buffer (the reference's
+  *     mapper + combiner); the K-row reduce, the divide and the cid sort
+  *     run on the driver over the tasks' partials, so no exchange and no
+  *     global sort runs (until the partials outgrow
+  *     `spark.driver.maxResultSize`; see [[step]]).
+  *
+  * The kernel gives the same bits as the DataFrame forms, which stay for
+  * the queries and the oracle: the [[assign]] column (`array_min` over
+  * [[graft.functions.SquaredDistance]] structs), the [[VecMeanAgg]]
+  * group-by ([[updateAgg]]) and the posexplode/avg mean ([[updateExplode]],
+  * oracle-translatable).
   *
   * Semantics kept from the reference (SURVEY.md §2.11): ties go to the
   * lower centroid id (strict `<` in mapper.py:64 keeps the earlier one);
@@ -46,7 +58,9 @@ case class Centroid(cid: Int, coordinates: Array[Double])
   * (reducer.py:59-67); convergence requires ALL surviving centroids to move
   * < eps (master.py:149-151), compared by id (the reference's positional
   * `zip` at master.py:100 silently mis-pairs after a vanish — we implement
-  * the evidently intended id-join).
+  * the evidently intended id-join). A point whose coordinates are null,
+  * hold a null, or do not have the centroids' length fails the call with
+  * an `IllegalArgumentException` naming its vec_id.
   */
 object Lloyd {
 
@@ -59,6 +73,27 @@ object Lloyd {
     points.orderBy("vec_id").limit(k).collect().zipWithIndex.map { case (r, i) =>
       Centroid(i + 1, r.getSeq[Double](r.fieldIndex("coordinates")).toArray)
     }.toSeq
+
+  /** The same init over point blocks: each task keeps its K smallest
+    * vec_ids in a bounded max-heap, and the driver takes the K smallest of
+    * those as cids 1..K. On a persisted RDD this job also fills the cache.
+    */
+  private def initCentroids(blocks: RDD[Block], k: Int): Seq[Centroid] =
+    contract(blocks.mapPartitions { it =>
+      val heap = mutable.PriorityQueue.empty[(Long, Array[Double])](Ordering.by(_._1))
+      it.foreach { b =>
+        val d = b.d
+        var i = 0
+        while (i < b.n) {
+          if (heap.size < k || (heap.nonEmpty && b.ids(i) < heap.head._1)) {
+            heap.enqueue(b.ids(i) -> java.util.Arrays.copyOfRange(b.xs, i * d, i * d + d))
+            if (heap.size > k) heap.dequeue()
+          }
+          i += 1
+        }
+      }
+      heap.iterator
+    }.collect().sortBy(_._1).take(k).zipWithIndex.map { case ((_, c), i) => Centroid(i + 1, c) }.toSeq)
 
   // (sfDir, k) -> init centroids. Deterministic (first K by vec_id over an
   // immutable fixture), so memoizing is pure: it only deletes the repeated
@@ -162,51 +197,162 @@ object Lloyd {
   private def centroids(means: Iterable[(Int, Array[Double])], grid: Option[Int]): Seq[Centroid] =
     means.toSeq.sortBy(_._1).map { case (cid, m) => Centroid(cid, grid.fold(m)(d => m.map(snap(_, d)))) }
 
-  /** One Lloyd iteration as one Spark job with one stage: the [[assign]]
-    * map, then each task folds its rows into a per-cid [[VecMeanBuf]] with
-    * [[VecMeanAgg.reduce]]. The driver collects the partials, merges them
-    * with [[VecMeanAgg.merge]] in partition order, divides, snaps to the
-    * grid and sorts by cid. Partition order makes the means the same from
-    * run to run, which merging as tasks finish (`treeAggregate`) would not.
-    * It is also the order the [[updateAgg]] exchange reads local map
-    * outputs in, so on one executor the means are bit-identical to
+  /** Rows per [[Block]]: large enough that per-block work vanishes next to
+    * the argmin loop, small enough that a block is a few MB at D = 64.
+    */
+  private val BlockRows = 4096
+
+  /** `points(vec_id, coordinates)` as [[Block]]s, one partition per
+    * partition of the planned query. Nothing runs until an action.
+    */
+  private def blocks(points: DataFrame): RDD[Block] =
+    points.select(col("vec_id").cast("long"), col("coordinates")).queryExecution.toRdd
+      .mapPartitions(toBlocks)
+
+  /** Packs rows into blocks, in row order. A block ends after
+    * [[BlockRows]] rows or before a row of another length, so every block
+    * has one `d` and the kernel can name a mismatched row. Null
+    * coordinates or a null element fail here.
+    */
+  private def toBlocks(rows: Iterator[InternalRow]): Iterator[Block] = new Iterator[Block] {
+    private val ids = new mutable.ArrayBuilder.ofLong
+    private val xs = new mutable.ArrayBuilder.ofDouble
+    private var n = 0
+    private var d = 0
+
+    def hasNext: Boolean = n > 0 || rows.hasNext
+
+    def next(): Block = {
+      var out: Block = null
+      while (out == null && rows.hasNext) {
+        val r = rows.next()
+        val id = r.getLong(0)
+        if (r.isNullAt(1)) throw new IllegalArgumentException(s"vec_id $id: coordinates are null")
+        val v = r.getArray(1)
+        val len = v.numElements()
+        if (n == BlockRows || (n > 0 && len != d)) out = flush()
+        d = len
+        ids.addOne(id)
+        var i = 0
+        while (i < len) {
+          if (v.isNullAt(i)) throw new IllegalArgumentException(s"vec_id $id: coordinate $i of $len is null")
+          xs.addOne(v.getDouble(i))
+          i += 1
+        }
+        n += 1
+      }
+      if (out == null) flush() else out
+    }
+
+    private def flush(): Block = {
+      val b = Block(ids.result(), xs.result())
+      ids.clear(); xs.clear(); n = 0
+      b
+    }
+  }
+
+  /** One task's fold of its blocks: each row goes to its nearest
+    * centroid, and buffer `c` of the result sums the rows of centroid `c`
+    * (row-major `cs`, cid order). The distance is `SquaredDistance`'s left-to-right
+    * `acc += t * t`; ties go to the lower cid and a NaN distance ranks
+    * above every number, as `array_min` orders the `(d, cid)` structs of
+    * [[assignCol]]. A cluster's first row is copied, not added to 0.0, as
+    * [[VecMeanAgg.reduce]] does, so each buffer has its bits.
+    */
+  private def fold(blocks: Iterator[Block], cs: Array[Double], k: Int, d: Int): Array[VecMeanBuf] = {
+    val sums = Array.fill(k)(new Array[Double](d))
+    val counts = new Array[Long](k)
+    blocks.foreach { b =>
+      if (b.d != d) throw new IllegalArgumentException(
+        s"vec_id ${b.ids(0)}: ${b.d} coordinates, but the centroids have $d")
+      val xs = b.xs
+      var r = 0
+      while (r < b.n) {
+        val o = r * d
+        var best = 0
+        var bestDist = 0.0
+        var c = 0
+        while (c < k) {
+          val co = c * d
+          var acc = 0.0
+          var i = 0
+          while (i < d) { val t = xs(o + i) - cs(co + i); acc += t * t; i += 1 }
+          if (c == 0 || acc < bestDist || (bestDist.isNaN && !acc.isNaN)) { best = c; bestDist = acc }
+          c += 1
+        }
+        val s = sums(best)
+        if (counts(best) == 0) System.arraycopy(xs, o, s, 0, d)
+        else { var i = 0; while (i < d) { s(i) += xs(o + i); i += 1 } }
+        counts(best) += 1
+        r += 1
+      }
+    }
+    Array.tabulate(k)(c => VecMeanBuf(sums(c), counts(c)))
+  }
+
+  /** Rethrows a task's input-contract failure as itself, not wrapped in
+    * Spark's job abort.
+    */
+  private def contract[T](job: => T): T =
+    try job catch {
+      case e: SparkException if e.getCause.isInstanceOf[IllegalArgumentException] => throw e.getCause
+    }
+
+  private def maxResultBytes(points: DataFrame): Long =
+    points.sparkSession.sparkContext.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+
+  /** One Lloyd iteration as one Spark job with one stage: each task
+    * [[fold]]s its point blocks into K (sum, count) buffers. The driver
+    * collects the partials, merges them with [[VecMeanAgg.merge]] in
+    * partition order, divides, snaps to the grid and sorts by cid.
+    * Partition order makes the means the same from run to run, which
+    * merging as tasks finish (`treeAggregate`) would not. It is also the
+    * order the [[updateAgg]] exchange reads local map outputs in, so on one
+    * executor the means are bit-identical to
     * `updateAgg(assign(points, cents)).orderBy("cid")` on the same input.
-    * A retried task starts from an empty map, and only successful tasks
+    * A retried task starts from empty buffers, and only successful tasks
     * report a partial, so no row is counted twice.
     *
-    * Each partial is at most K buffers of D doubles, and the driver holds
-    * all P of them at once. Spark counts every task result of a job against
+    * This form packs uncached blocks from `points` on every call; [[run]]
+    * packs and caches them once per loop.
+    *
+    * Each partial is K buffers of D doubles, and the driver holds all P of
+    * them at once. Spark counts every task result of a job against
     * `spark.driver.maxResultSize`, so the one-job shape needs about
     * P × K × (D + 1) × 8 bytes under that limit. When that estimate passes
-    * half the limit ([[partialsFit]]), the iteration runs as the
-    * [[updateAgg]] query instead, which shuffles the same buffers and
-    * collects K rows.
+    * half the limit ([[partialsFit]]), the partials are shuffled by cluster
+    * to at most K reducers instead; each merges its cluster's partials in
+    * partition order, which gives the same bits, and the driver collects
+    * K means.
     */
   def step(points: DataFrame, cents: Seq[Centroid], grid: Option[Int] = None): Seq[Centroid] =
-    step(points, cents, grid,
-      points.sparkSession.sparkContext.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g"))
+    step(points, cents, grid, maxResultBytes(points))
 
   private[kmeans] def step(points: DataFrame, cents: Seq[Centroid], grid: Option[Int],
-                           maxResultBytes: Long): Seq[Centroid] = {
-    val assigned = assign(points, cents)
-    val rows = assigned.select("cid", "coordinates").queryExecution.toRdd
-    val d = cents.headOption.fold(0)(_.coordinates.length)
-    val means =
-      if (!partialsFit(rows.getNumPartitions, cents.size, d, maxResultBytes))
-        updateAgg(assigned).collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).toSeq
-      else rows.mapPartitions { it =>
-        val bufs = mutable.HashMap.empty[Int, VecMeanBuf]
-        it.foreach { r =>
-          val v = ArraySeq.unsafeWrapArray(r.getArray(1).toDoubleArray())
-          bufs.updateWith(r.getInt(0))(b => Some(VecMeanAgg.reduce(b.getOrElse(VecMeanAgg.zero), v)))
-        }
-        Iterator(bufs.toMap)
-      }.collect().foldLeft(Map.empty[Int, VecMeanBuf]) { (acc, part) =>
-        part.foldLeft(acc) { case (m, (cid, b)) =>
-          m.updated(cid, VecMeanAgg.merge(m.getOrElse(cid, VecMeanAgg.zero), b))
-        }
-      }.map { case (cid, b) => cid -> VecMeanAgg.finish(b).toArray }
-    centroids(means, grid)
+                           maxResultBytes: Long): Seq[Centroid] =
+    contract(step(blocks(points), cents, grid, maxResultBytes))
+
+  private def step(blocks: RDD[Block], cents: Seq[Centroid], grid: Option[Int],
+                   maxResultBytes: Long): Seq[Centroid] = {
+    require(cents.nonEmpty, "no centroids")
+    val byCid = cents.sortBy(_.cid).toIndexedSeq
+    val k = byCid.size
+    val d = byCid.head.coordinates.length
+    val cs = byCid.flatMap(_.coordinates).toArray
+    val partials = blocks.mapPartitions(it => Iterator(fold(it, cs, k, d)))
+    val bufs: Seq[(Int, VecMeanBuf)] =
+      if (partialsFit(blocks.getNumPartitions, k, d, maxResultBytes))
+        partials.collect().foldLeft(Array.fill(k)(VecMeanAgg.zero)) { (acc, part) =>
+          for (c <- acc.indices) acc(c) = VecMeanAgg.merge(acc(c), part(c))
+          acc
+        }.toSeq.zipWithIndex.map(_.swap)
+      else
+        partials.mapPartitionsWithIndex { (pid, it) =>
+          it.flatMap(_.iterator.zipWithIndex.collect { case (b, c) if b.n > 0 => c -> (pid, b) })
+        }.groupByKey(new HashPartitioner(k)).mapValues { ps =>
+          ps.toSeq.sortBy(_._1).foldLeft(VecMeanAgg.zero)((acc, p) => VecMeanAgg.merge(acc, p._2))
+        }.collect().toSeq
+    centroids(bufs.collect { case (c, b) if b.n > 0 => byCid(c).cid -> VecMeanAgg.finish(b).toArray }, grid)
   }
 
   /** Whether P partials of K (sum, count) buffers of D doubles, ~P × K ×
@@ -217,10 +363,14 @@ object Lloyd {
     maxResultBytes <= 0 || numPartitions.toLong * k * (d + 1) * 8 <= maxResultBytes / 2
 
   /** Full driver loop: iterate until `maxIter` or all centroids moved < eps.
-    * Each iteration is one [[step]] (one Spark job) with `useAgg`, or the
-    * [[updateExplode]] plan sorted on the driver without; points are cached
-    * once. Every iteration writes `[lloyd] iter=<i> max_shift=<d> s=<t>` to
-    * stderr. Returns (final centroids, iterations run).
+    * With `useAgg`, the points are packed into [[Block]]s and persisted
+    * once, the init job fills that cache, and each iteration is one
+    * [[step]] over it (one Spark job, no query planned). Without, the
+    * points are cached as a DataFrame and each iteration runs the
+    * [[updateExplode]] query, sorted on the driver. Either cache is
+    * released when the call returns or throws. Every iteration writes
+    * `[lloyd] iter=<i> max_shift=<d> s=<t>` to stderr. Returns (final
+    * centroids, iterations run).
     *
     * `grid = Some(d)` snaps every collected mean to the 1e-d decimal grid
     * before the next assignment — the q_kmeans_iter2 determinism
@@ -231,17 +381,30 @@ object Lloyd {
     * the 1e-7 grid absorbs). `None` keeps raw means (MLlib parity tests).
     */
   def run(points: DataFrame, k: Int, maxIter: Int = 10, eps: Double = 1e-6,
-          useAgg: Boolean = true, grid: Option[Int] = None): (Seq[Centroid], Int) = {
-    val pts = points.select("vec_id", "coordinates").cache()
-    var cents = initCentroids(pts, k)
+          useAgg: Boolean = true, grid: Option[Int] = None): (Seq[Centroid], Int) =
+    run(points, k, maxIter, eps, useAgg, grid, maxResultBytes(points))
+
+  private[kmeans] def run(points: DataFrame, k: Int, maxIter: Int, eps: Double, useAgg: Boolean,
+                          grid: Option[Int], maxResultBytes: Long): (Seq[Centroid], Int) =
+    if (useAgg) {
+      val pts = blocks(points).persist(StorageLevel.MEMORY_AND_DISK)
+      try loop(initCentroids(pts, k), maxIter, eps)(cents => contract(step(pts, cents, grid, maxResultBytes)))
+      finally pts.unpersist()
+    } else {
+      val pts = points.select("vec_id", "coordinates").cache()
+      try loop(initCentroids(pts, k), maxIter, eps)(cents => centroids(updateExplode(assign(pts, cents))
+        .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toArray), grid))
+      finally pts.unpersist()
+    }
+
+  private def loop(init: Seq[Centroid], maxIter: Int, eps: Double)(
+      step: Seq[Centroid] => Seq[Centroid]): (Seq[Centroid], Int) = {
+    var cents = init
     var iters = 0
     var converged = false
     while (iters < maxIter && !converged) {
       val t0 = System.nanoTime()
-      val next =
-        if (useAgg) step(pts, cents, grid)
-        else centroids(updateExplode(assign(pts, cents)).collect()
-          .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray), grid)
+      val next = step(cents)
       iters += 1
       // id-join convergence: every surviving centroid moved < eps AND no
       // cluster vanished this round (a vanish changes the id set -> not
@@ -258,7 +421,6 @@ object Lloyd {
       cents = next
       System.err.println(f"[lloyd] iter=$iters max_shift=$maxShift%.3e s=${(System.nanoTime() - t0) / 1e9}%.3f")
     }
-    pts.unpersist()
     (cents, iters)
   }
 }

@@ -8,8 +8,9 @@ import graft.kmeans.{Centroid, Lloyd}
   * (K = 5, 10 fixed iterations, no early stop) over the synthetic-sf1
   * embeddings at /tmp/stress_sf1, printing per-iteration wall time. Each
   * iteration is the production shape, [[Lloyd.step]]: one Spark job whose
-  * tasks assign their points to the literal centroids (zero shuffle) and
-  * fold them into K VecMeanAgg buffers, merged on the driver. Usage:
+  * tasks pack their points into dense blocks, assign them to the K
+  * centroids (zero shuffle) and fold them into K (sum, count) buffers,
+  * merged on the driver. Usage:
   *
   *   SPARK_GRAFT_SF_DIR=/tmp/stress_sf1 sbt "runMain graft.tools.StressLloyd"
   */

@@ -28,11 +28,11 @@ class FaultToleranceSpec extends AnyFunSuite {
     assert(got == (1L to 1000L).map(_ * 2).sum)
   }
 
-  test("a Lloyd step whose every task fails on attempt 0 is bit-identical to the no-fault step") {
-    val spark = TestSpark.spark
-    // four splits, so the driver merges four retried partials
+  /** The sf0.001 points on four splits, and the same points with every
+    * task's attempt 0 throwing from a `failOnce` UDF on the coordinates.
+    */
+  private def faultyPoints(spark: SparkSession) = {
     val pts = graft.core.Tables.points(spark, TestSpark.Sf0001).repartition(4)
-    val cents = Lloyd.initCentroids(pts, 5)
     val failOnce = udf { (v: Seq[Double]) =>
       if (TaskContext.get().attemptNumber() == 0) {
         FaultToleranceSpec.injected.incrementAndGet()
@@ -40,15 +40,37 @@ class FaultToleranceSpec extends AnyFunSuite {
       }
       v
     }
+    (pts, pts.withColumn("coordinates", failOnce(col("coordinates"))))
+  }
+
+  private def bits(cs: Seq[Centroid]) =
+    cs.map(c => c.cid -> c.coordinates.map(java.lang.Double.doubleToRawLongBits).toSeq)
+
+  test("a Lloyd step whose every task fails on attempt 0 is bit-identical to the no-fault step") {
+    val spark = TestSpark.spark
+    // four splits, so the driver merges four retried partials
+    val (pts, faulty) = faultyPoints(spark)
+    val cents = Lloyd.initCentroids(pts, 5)
     // uncached: every retried task re-reads and re-assigns its split, and
-    // must fold it from an empty buffer map
-    val faulty = pts.withColumn("coordinates", failOnce(col("coordinates")))
+    // must fold it from empty buffers
     val injected0 = FaultToleranceSpec.injected.get()
     val got = Lloyd.step(faulty, cents)
     assert(FaultToleranceSpec.injected.get() - injected0 == 4)
-    def bits(cs: Seq[Centroid]) =
-      cs.map(c => c.cid -> c.coordinates.map(java.lang.Double.doubleToRawLongBits).toSeq)
     assert(bits(got) == bits(Lloyd.step(pts, cents)))
+  }
+
+  test("a Lloyd loop whose cache fill fails on attempt 0 is bit-identical and leaves nothing persisted") {
+    val spark = TestSpark.spark
+    val (pts, faulty) = faultyPoints(spark)
+    val (exp, expIters) = Lloyd.run(pts, k = 5, grid = Some(7))
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val injected0 = FaultToleranceSpec.injected.get()
+    // the init job packs each split once into the cache; every iteration reads the cache
+    val (got, gotIters) = Lloyd.run(faulty, k = 5, grid = Some(7))
+    assert(FaultToleranceSpec.injected.get() - injected0 == 4)
+    assert(gotIters == expIters)
+    assert(bits(got) == bits(exp))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted)
   }
 }
 

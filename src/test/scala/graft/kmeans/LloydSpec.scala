@@ -2,7 +2,9 @@ package graft.kmeans
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.types._
 import org.apache.spark.sql.functions._
 
 import graft.TestSpark
@@ -150,13 +152,14 @@ class LloydSpec extends AnyFunSuite {
     pts.unpersist()
   }
 
-  /** (jobs, stages, shuffle map tasks) that `body` runs, counted by a
-    * `SparkListener` on a local property set only around `body`.
+  /** (jobs, stages, shuffle map tasks, SQL executions) that `body` runs,
+    * counted by a `SparkListener` on a local property and a job tag set
+    * only around `body`.
     */
-  private def counted[T](body: => T): (T, (Int, Int, Int)) = {
+  private def counted[T](body: => T): (T, (Int, Int, Int, Int)) = {
     val sc = spark.sparkContext
     val tag = "graft.test.lloyd"
-    var jobs, stages, shuffleMapTasks = 0
+    var jobs, stages, shuffleMapTasks, sqlExecutions = 0
     val listener = new SparkListener {
       private val mine = scala.collection.mutable.Set.empty[Int]
       override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
@@ -171,39 +174,54 @@ class LloydSpec extends AnyFunSuite {
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
         if (mine(e.stageId) && e.taskType == "ShuffleMapTask") shuffleMapTasks += 1
       }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.jobTags.contains(tag) =>
+          synchronized(sqlExecutions += 1)
+        case _ =>
+      }
     }
     sc.addSparkListener(listener)
     try {
       sc.setLocalProperty(tag, "1")
-      val out = try body finally sc.setLocalProperty(tag, null)
+      sc.addJobTag(tag)
+      val out = try body finally { sc.setLocalProperty(tag, null); sc.removeJobTag(tag) }
       org.apache.spark.TestListenerBus.drain(sc)
-      (out, listener.synchronized((jobs, stages, shuffleMapTasks)))
+      (out, listener.synchronized((jobs, stages, shuffleMapTasks, sqlExecutions)))
     } finally sc.removeSparkListener(listener)
   }
 
   test("one Lloyd iteration is one Spark job with one stage and no shuffle") {
     // eps = 0 never converges, so each call runs exactly maxIter iterations
-    def run(maxIter: Int) = counted(
-      Lloyd.run(graft.core.Tables.points(spark, TestSpark.Sf0001), k = 5, maxIter = maxIter, eps = 0.0)._2)
-    val (iters2, (jobs2, stages2, _)) = run(2)
-    val (iters3, (jobs3, stages3, shuffle3)) = run(3)
+    val pts = graft.core.Tables.points(spark, TestSpark.Sf0001)
+    def run(maxIter: Int, maxResultBytes: Long = 1L << 30) =
+      counted(Lloyd.run(pts, k = 5, maxIter = maxIter, eps = 0.0, useAgg = true, grid = None, maxResultBytes))
+    val ((_, iters2), (jobs2, stages2, _, sql2)) = run(2)
+    val ((got3, iters3), (jobs3, stages3, shuffle3, sql3)) = run(3)
     assert(iters2 == 2 && iters3 == 3)
     assert(jobs3 - jobs2 == 1, s"jobs per iteration: ${jobs3 - jobs2}")
     assert(stages3 - stages2 == 1, s"stages per iteration: ${stages3 - stages2}")
     assert(shuffle3 == 0, s"$shuffle3 shuffle map tasks in a 3-iteration run")
+    assert(sql3 - sql2 == 0, s"SQL executions per iteration: ${sql3 - sql2}")
+    val (_, (_, _, _, sqlProbe)) = counted(pts.limit(1).collect())
+    assert(sqlProbe == 1, "the counter does not see a DataFrame collect")
+    // past a 1-byte maxResultSize every iteration shuffles its partials, to the same bits
+    val ((fallback, fallbackIters), (_, _, fallbackShuffle, _)) = run(3, maxResultBytes = 1L)
+    assert(fallbackShuffle > 0, "the fallback did not shuffle")
+    assert(fallbackIters == 3)
+    assert(bits(fallback) == bits(got3))
   }
 
-  test("step falls back to the updateAgg query when the partials would pass maxResultSize") {
+  test("step shuffles its partials by cluster when they would pass maxResultSize") {
     // K = 5, D = 64: 2,600 bytes of partials per partition against half of 1 GiB
     assert(Lloyd.partialsFit(206000, 5, 64, 1L << 30))
     assert(!Lloyd.partialsFit(207000, 5, 64, 1L << 30))
     assert(Lloyd.partialsFit(Int.MaxValue, 5, 64, 0L))
     val pts = graft.core.Tables.points(spark, TestSpark.Sf0001).repartition(4).cache()
     val cents = Lloyd.initCentroids(pts, 5)
-    val (oneJob, (_, _, oneJobShuffle)) = counted(Lloyd.step(pts, cents, None, 1L << 30))
-    val (fallback, (_, _, fallbackShuffle)) = counted(Lloyd.step(pts, cents, None, 1L))
+    val (oneJob, (_, _, oneJobShuffle, _)) = counted(Lloyd.step(pts, cents, None, 1L << 30))
+    val (fallback, (_, _, fallbackShuffle, _)) = counted(Lloyd.step(pts, cents, None, 1L))
     assert(oneJobShuffle == 0)
-    assert(fallbackShuffle > 0, "the fallback did not run the updateAgg exchange")
+    assert(fallbackShuffle > 0, "the fallback did not shuffle the partials")
     assert(bits(fallback) == bits(oneJob))
     assert(bits(fallback) == bits(aggStep(pts, cents)))
     pts.unpersist()
@@ -220,6 +238,76 @@ class LloydSpec extends AnyFunSuite {
       assert(iters == baseIters, s"$name partitions")
       assert(bits(got) == bits(base), s"$name partitions")
     }
+  }
+
+  private def frame(rows: (Long, Seq[Any])*): DataFrame = spark.createDataFrame(
+    java.util.Arrays.asList(rows.map { case (id, v) => Row(id, v) }: _*),
+    StructType(Seq(StructField("vec_id", LongType, nullable = false),
+      StructField("coordinates", ArrayType(DoubleType, containsNull = true)))))
+
+  test("the kernel sends equal distances to the lower cid, as assign + updateAgg does") {
+    // (0, 0) and (0, 4) are equidistant from cids 1 and 2
+    val pts = frame(0L -> Seq(0.0, 0.0), 1L -> Seq(0.0, 4.0), 2L -> Seq(-3.0, 0.0))
+    val cents = Seq(Centroid(2, Array(1.0, 2.0)), Centroid(1, Array(-1.0, 2.0)))
+    val got = Lloyd.step(pts, cents)
+    assert(bits(got) == bits(aggStep(pts, cents)))
+    assert(got.map(_.cid) == Seq(1))
+  }
+
+  test("the kernel ranks a NaN distance above every number, as assign + updateAgg does") {
+    // cid 1 is NaN away from every point; point 2 is NaN away from every centroid
+    val pts = frame(0L -> Seq(0.0, 0.0), 1L -> Seq(9.0, 9.0), 2L -> Seq(Double.NaN, 1.0))
+    val cents = Seq(Centroid(1, Array(Double.NaN, 0.0)), Centroid(2, Array(1.0, 1.0)),
+      Centroid(3, Array(10.0, 10.0)))
+    val got = Lloyd.step(pts, cents)
+    assert(bits(got) == bits(aggStep(pts, cents)))
+    assert(got.map(_.cid) == Seq(1, 2, 3))
+    assert(got.head.coordinates(0).isNaN && got.head.coordinates(1) == 1.0)
+  }
+
+  test("a singleton cluster at -0.0 keeps -0.0 without a grid, as assign + updateAgg does") {
+    val pts = frame(0L -> Seq(-0.0, 1.0), 1L -> Seq(10.0, 10.0), 2L -> Seq(11.0, 10.0))
+    val cents = Seq(Centroid(1, Array(0.0, 0.0)), Centroid(2, Array(10.0, 10.0)))
+    val got = Lloyd.step(pts, cents)
+    assert(bits(got) == bits(aggStep(pts, cents)))
+    assert(java.lang.Double.doubleToRawLongBits(got.head.coordinates(0)) ==
+      java.lang.Double.doubleToRawLongBits(-0.0))
+  }
+
+  /** `body` fails with an IllegalArgumentException whose message names
+    * every part of `names`, and leaves no RDD persisted.
+    */
+  private def rejects(names: String*)(body: => Any): Unit = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val e = intercept[IllegalArgumentException](body)
+    for (n <- names) assert(e.getMessage.contains(n), e.getMessage)
+    assert(sc.getPersistentRDDs.keySet == before)
+  }
+
+  private val valid = Seq(0L -> Seq(0.0, 0.0), 1L -> Seq(1.0, 0.0), 2L -> Seq(5.0, 5.0))
+
+  test("a point with null coordinates fails the call, naming its vec_id") {
+    val pts = frame(valid :+ (7L -> null): _*)
+    rejects("vec_id 7", "null")(Lloyd.run(pts, k = 2))
+    rejects("vec_id 7", "null")(Lloyd.step(pts, Lloyd.initCentroids(pts.filter("vec_id < 7"), 2)))
+  }
+
+  test("a point with a null element fails the call, naming its vec_id and length") {
+    val pts = frame(valid :+ (7L -> Seq(1.0, null)): _*)
+    rejects("vec_id 7", "coordinate 1 of 2 is null")(Lloyd.run(pts, k = 2))
+    rejects("vec_id 7", "coordinate 1 of 2 is null")(
+      Lloyd.step(pts, Lloyd.initCentroids(pts.filter("vec_id < 7"), 2)))
+  }
+
+  test("a point whose length differs from the centroids' fails the call, naming both lengths") {
+    val pts = frame(valid :+ (7L -> Seq(1.0, 2.0, 3.0)): _*)
+    rejects("vec_id 7", "3 coordinates", "centroids have 2")(Lloyd.run(pts, k = 2))
+    rejects("vec_id 7", "3 coordinates", "centroids have 2")(
+      Lloyd.step(pts, Lloyd.initCentroids(pts.filter("vec_id < 7"), 2)))
+    // the short row sits between valid rows of one partition
+    val mid = frame(0L -> Seq(0.0, 0.0), 5L -> Seq(1.0), 1L -> Seq(1.0, 0.0), 2L -> Seq(5.0, 5.0))
+    rejects("vec_id 5", "1 coordinates", "centroids have 2")(Lloyd.run(mid, k = 2))
   }
 
   test("full loop converges and assignment is a fixpoint at convergence") {
